@@ -234,11 +234,9 @@ def abort_staged(metadata_path: str, ref: str) -> dict[str, Any]:
         raise ValueError(f"no staged ref {ref!r}")
     sid = raw["refs"][ref]["snapshot-id"]
     del raw["refs"][ref]
-    from .commit import _next_metadata_path
+    from .commit import _write_metadata
 
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = _write_metadata(metadata_path, raw)
     return {"metadata_path": new_path, "aborted_snapshot_id": sid}
 
 

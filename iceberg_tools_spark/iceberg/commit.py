@@ -12,6 +12,28 @@ Iceberg ``AppendFiles`` operation produces
 (reference schema lineage: ManifestFileReadTool.java:170-197 reads
 exactly the record shapes written here).
 
+Commit protocol. Every snapshot-producing path — append, overwrite,
+delete and row delta here, the delete-folding and binpack rewrites
+(``rewrite_data``), position-delete compaction (``rewrite_deletes``)
+and the sorted rewrite (``sortorder``) — runs the same four steps
+through the same helpers:
+
+1. manifests: :func:`_write_manifest` writes one manifest Avro and
+   returns its manifest-list row, with counts, minimum sequence
+   number, partition summaries and schema flags derived from the
+   entries; :func:`_carry_forward` rebuilds the parent manifests a
+   rewrite touches (survivors kept as EXISTING) through it;
+2. manifest list: :func:`_commit_snapshot` writes
+   ``snap-<id>.avro`` over the rows;
+3. snapshot + logs: :func:`_commit_snapshot` moves the sequence
+   number, timestamp and current snapshot (or staging ref), appends
+   the snapshot with its summary totals plus the snapshot-log and
+   metadata-log entries, and applies metadata-log retention;
+4. metadata.json: :func:`_write_metadata` writes the next version to
+   a temp file and renames it into place — metadata-only commits
+   (schema, refs, rollback, publish, expiry, properties, sort orders,
+   spec evolution, REST) write through it too.
+
 Deterministic by construction: no wall clock (timestamp defaults to
 parent's + 1 s), no randomness (Avro sync markers are md5 of the
 schema), so identical inputs produce byte-identical metadata —
@@ -28,14 +50,15 @@ from __future__ import annotations
 import json
 import os
 import re
-from typing import Any
+from typing import Any, Callable
 
+from ..avro.reader import AvroContainerFile
 from ..avro.writer import write_container
 from .conversions import to_bytes
 from .metadata import TableMetadata, parse_metadata
-from .snapshots import _local, read_manifest_list
+from .snapshots import _local, manifest_files_at, read_manifest_list
 
-ADDED = 1
+EXISTING, ADDED, DELETED = 0, 1, 2  # manifest entry status
 
 # Iceberg type → (avro primitive for partition values). Dates and
 # timestamps store as their spec physical forms: int days since
@@ -274,11 +297,260 @@ def _canonical_metadata_uri(metadata_path: str, table_root: str, loc: str | None
 
 def _next_metadata_path(metadata_path: str, snapshot_id: int) -> str:
     d, base = os.path.dirname(metadata_path), os.path.basename(metadata_path)
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", base)
+    m = re.fullmatch(r"v(\d+)\.metadata\.json(\.gz)?", base)
     if m:
         return os.path.join(d, f"v{int(m.group(1)) + 1}.metadata.json")
     stem = base.removesuffix(".metadata.json").removesuffix(".json")
     return os.path.join(d, f"{stem}.commit-{snapshot_id}.metadata.json")
+
+
+def _write_metadata(metadata_path: str, raw: dict[str, Any], snapshot_id: int = 0) -> str:
+    """Write ``raw`` as the version after ``metadata_path`` and return
+    its path. The JSON goes to ``<next>.tmp`` first and is renamed
+    into place, so a failed write leaves no truncated version for
+    the catalog to pick as newest."""
+    new_path = _next_metadata_path(metadata_path, snapshot_id)
+    tmp = new_path + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(raw, f, indent=2)
+        os.replace(tmp, new_path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    return new_path
+
+
+def _table_dirs(raw: dict[str, Any], base_dir: str) -> tuple[str, str, str]:
+    """(location, table root, metadata dir) of a table whose
+    metadata.json sits in ``base_dir`` — ``<root>/metadata/`` or
+    the root itself."""
+    table_root = (
+        base_dir
+        if os.path.isdir(os.path.join(base_dir, "metadata"))
+        else os.path.dirname(base_dir)
+    )
+    loc = raw.get("location") or f"file://{os.path.dirname(base_dir)}"
+    return loc, table_root, os.path.join(table_root, "metadata")
+
+
+def _next_ids(
+    raw: dict[str, Any], snapshot_id: int | None, timestamp_ms: int | None
+) -> tuple[int, int, int]:
+    """(snapshot id, sequence number, timestamp) of the next
+    snapshot. Caller-given values win; the defaults are the highest
+    snapshot id + 1 and the last update + 1 s (no wall clock)."""
+    if snapshot_id is None:
+        snapshot_id = max((s["snapshot-id"] for s in raw.get("snapshots", [])), default=0) + 1
+    if timestamp_ms is None:
+        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
+    return snapshot_id, raw.get("last-sequence-number", 0) + 1, timestamp_ms
+
+
+def _assign_row_ids(entries: list[dict[str, Any]], next_row_id: int) -> int:
+    """v3 row lineage: every data entry without a ``first_row_id``
+    gets one from the table's ``next-row-id`` counter (its rows'
+    ``_row_id`` derive as first_row_id + position). Caller-assigned
+    ids — a lineage-preserving replication carrying a foreign
+    table's row ids — only push the counter past them. Returns the
+    advanced counter."""
+    for e in entries:
+        df = e["data_file"]
+        n = int(df.get("record_count") or 0)
+        if df.get("first_row_id") is None:
+            df["first_row_id"] = next_row_id
+            next_row_id += n
+        else:
+            next_row_id = max(next_row_id, int(df["first_row_id"]) + n)
+    return next_row_id
+
+
+def _write_manifest(
+    meta: TableMetadata,
+    meta_dir: str,
+    loc: str,
+    name: str,
+    entries: list[dict[str, Any]],
+    *,
+    spec_id: int,
+    content: int,
+    sequence_number: int,
+    added_snapshot_id: int,
+    suffix: str,
+) -> dict[str, Any]:
+    """Write one manifest as ``<meta_dir>/<name>`` and return its
+    manifest-list row. What the row says about the entries is
+    derived from them: file and row counts per entry status, the
+    minimum sequence number of the live entries (a null entry
+    sequence inherits ``sequence_number``) and the partition
+    summaries under ``spec_id``. The entry schema carries the v3
+    deletion-vector fields when an entry references a data file, and
+    row-lineage ``first_row_id`` for the data manifests of a v3
+    table. ``suffix`` keeps the schema's record names unique."""
+    part_fields = _spec_partition_fields(meta, spec_id)
+    v3 = any(e["data_file"].get("referenced_data_file") is not None for e in entries)
+    lineage = content == 0 and int(meta.raw.get("format-version", 2)) >= 3
+    blob = write_container(
+        manifest_entry_schema(part_fields, suffix, v3=v3, lineage=lineage), entries
+    )
+    with open(os.path.join(meta_dir, name), "wb") as f:
+        f.write(blob)
+    row = {
+        "manifest_path": f"{loc}/metadata/{name}",
+        "manifest_length": len(blob),
+        "partition_spec_id": spec_id,
+        "content": content,
+        "sequence_number": sequence_number,
+        "min_sequence_number": min(
+            (
+                sequence_number if e["sequence_number"] is None else e["sequence_number"]
+                for e in entries
+                if e["status"] != DELETED
+            ),
+            default=sequence_number,
+        ),
+        "added_snapshot_id": added_snapshot_id,
+        "partitions": partition_summaries(entries, part_fields),
+    }
+    for status, label in ((ADDED, "added"), (EXISTING, "existing"), (DELETED, "deleted")):
+        counts = [e["data_file"]["record_count"] for e in entries if e["status"] == status]
+        row[f"{label}_files_count"] = len(counts)
+        row[f"{label}_rows_count"] = sum(counts)
+    return row
+
+
+def _carry_forward(
+    meta: TableMetadata,
+    base_dir: str,
+    snapshot_id: int,
+    *,
+    content: int,
+    drop: Callable[[dict[str, Any]], bool],
+    tag: str,
+) -> list[dict[str, Any]]:
+    """The current snapshot's manifest-list rows without the
+    ``content``-kind entries whose data file ``drop`` selects.
+    Manifests of the other kind, and those holding nothing to drop,
+    carry forward verbatim (parent row re-used, zero Avro churn). A
+    touched manifest is rebuilt as ``<stem>-<tag><snapshot_id>.avro``
+    with its live survivors re-statused EXISTING, their inherited
+    sequence number and snapshot id made explicit (each against its
+    own partition spec); one with no survivors is dropped."""
+    parent_id = meta.raw["current-snapshot-id"]
+    loc, _, meta_dir = _table_dirs(meta.raw, base_dir)
+    rows: list[dict[str, Any]] = []
+    for mrow in manifest_files_at(meta, parent_id, base_dir):
+        local = mrow.pop("local_path")
+        if mrow.get("content", 0) != content:
+            rows.append(mrow)
+            continue
+        with open(local, "rb") as f:
+            records = list(AvroContainerFile(f.read()))
+        if not any(drop(r["data_file"]) for r in records):
+            rows.append(mrow)
+            continue
+        mseq = mrow.get("sequence_number", 0)
+        msid = mrow.get("added_snapshot_id", parent_id)
+        kept = [
+            {
+                "status": EXISTING,
+                "snapshot_id": msid if r.get("snapshot_id") is None else r["snapshot_id"],
+                "sequence_number": mseq if r.get("sequence_number") is None else r["sequence_number"],
+                "data_file": r["data_file"],
+            }
+            for r in records
+            if r["status"] != DELETED and not drop(r["data_file"])
+        ]
+        if not kept:
+            continue
+        stem = os.path.basename(local).rsplit(".", 1)[0]
+        rows.append(
+            _write_manifest(
+                meta, meta_dir, loc, f"{stem}-{tag}{snapshot_id}.avro", kept,
+                spec_id=mrow.get("partition_spec_id", 0), content=content,
+                sequence_number=mseq, added_snapshot_id=msid,
+                suffix=f"{tag}{snapshot_id}_{stem}",
+            )
+        )
+    return rows
+
+
+def _commit_snapshot(
+    metadata_path: str,
+    raw: dict[str, Any],
+    rows: list[dict[str, Any]],
+    *,
+    base_dir: str,
+    snapshot_id: int,
+    sequence_number: int,
+    timestamp_ms: int,
+    summary: dict[str, str],
+    extra_summary: dict[str, str] | None = None,
+    stage_ref: str | None = None,
+    first_row_id: int | None = None,
+) -> dict[str, Any]:
+    """Commit ``rows`` as the manifest list of a new snapshot whose
+    parent is the current one: write ``snap-<id>.avro``, move the
+    sequence number, timestamp and current snapshot (or, for
+    write-audit-publish staging, only the ``stage_ref`` branch —
+    main does NOT move until ``publish_snapshot`` fast-forwards it),
+    append the snapshot (summary totals derived from ``rows``) and
+    its snapshot-log and metadata-log entries, apply metadata-log
+    retention and write the next metadata.json. ``raw`` is the
+    caller's deep copy of the current metadata."""
+    loc, table_root, meta_dir = _table_dirs(raw, base_dir)
+    list_path = os.path.join(meta_dir, f"snap-{snapshot_id}.avro")
+    with open(list_path, "wb") as f:
+        f.write(write_container(MANIFEST_LIST_SCHEMA, rows))
+
+    parent_id = raw.get("current-snapshot-id")
+    raw["last-sequence-number"] = sequence_number
+    raw["last-updated-ms"] = timestamp_ms
+    if stage_ref is None:
+        raw["current-snapshot-id"] = snapshot_id
+    else:
+        raw.setdefault("refs", {})[stage_ref] = {"snapshot-id": snapshot_id, "type": "branch"}
+    raw.setdefault("snapshots", []).append(
+        {
+            "sequence-number": sequence_number,
+            "snapshot-id": snapshot_id,
+            **({"parent-snapshot-id": parent_id} if parent_id is not None else {}),
+            **({"first-row-id": first_row_id} if first_row_id is not None else {}),
+            "timestamp-ms": timestamp_ms,
+            "summary": {**summary, **_summary_totals(rows), **(extra_summary or {})},
+            "manifest-list": f"{loc}/metadata/snap-{snapshot_id}.avro",
+            "schema-id": raw.get("current-schema-id", 0),
+        }
+    )
+    if stage_ref is None:
+        raw.setdefault("snapshot-log", []).append(
+            {"timestamp-ms": timestamp_ms, "snapshot-id": snapshot_id}
+        )
+    raw.setdefault("metadata-log", []).append(
+        {"timestamp-ms": timestamp_ms,
+         "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc)}
+    )
+    # spec metadata-log retention: `write.metadata.previous-versions-max`
+    # caps the log on every commit; `write.metadata.delete-after-
+    # commit.enabled` also deletes the dropped vN.metadata.json files
+    props = raw.get("properties", {})
+    vmax = int(props.get("write.metadata.previous-versions-max", 0) or 0)
+    dropped_meta = raw["metadata-log"][:-vmax] if vmax > 0 else []
+    if dropped_meta:
+        raw["metadata-log"] = raw["metadata-log"][-vmax:]
+    new_path = _write_metadata(metadata_path, raw, snapshot_id)
+    if props.get("write.metadata.delete-after-commit.enabled") == "true":
+        for e in dropped_meta:
+            p = _local(e["metadata-file"], base_dir, loc)
+            if os.path.exists(p) and os.path.abspath(p) != os.path.abspath(new_path):
+                os.remove(p)
+    return {
+        "metadata_path": new_path,
+        "snapshot_id": snapshot_id,
+        "sequence_number": sequence_number,
+        "manifest_list_path": list_path,
+    }
 
 
 def append_snapshot(
@@ -422,8 +694,6 @@ def _retire_replaced_dvs(
     refs: set[str],
     meta: TableMetadata,
     base_dir: str,
-    loc: str,
-    meta_dir: str,
     snapshot_id: int,
 ) -> None:
     """v3 deletion-vector replacement: any carried-forward delete
@@ -431,56 +701,36 @@ def _retire_replaced_dvs(
     is in ``refs`` is rewritten (to a NEW manifest file — the
     original stays for older snapshots' lists) with that entry
     re-statused DELETED, its sequence number made explicit (a
-    tombstone no longer inherits), and the list row's path/length/
-    counts updated in place. Raises if a claimed-replaced ref has no
-    live DV in any carried manifest (the caller's replacement set
-    would silently diverge from table state)."""
-    from ..avro.reader import AvroContainerFile
-
+    tombstone no longer inherits), and its list row replaced in
+    place. Raises if a claimed-replaced ref has no live DV in any
+    carried manifest (the caller's replacement set would silently
+    diverge from table state)."""
+    loc, _, meta_dir = _table_dirs(meta.raw, base_dir)
     found: set[str] = set()
     for i, row in enumerate(rows):
         if row.get("content", 0) != 1:
             continue
-        local = _local(row["manifest_path"], base_dir, loc)
-        with open(local, "rb") as f:
+        with open(_local(row["manifest_path"], base_dir, loc), "rb") as f:
             records = list(AvroContainerFile(f.read()))
         hits = [
             r
             for r in records
-            if r["status"] != 2
+            if r["status"] != DELETED
             and r["data_file"].get("referenced_data_file") in refs
         ]
         if not hits:
             continue
         for r in hits:
-            r["status"] = 2  # DELETED tombstone
+            r["status"] = DELETED  # tombstone
             if r.get("sequence_number") is None:
                 r["sequence_number"] = row["sequence_number"]
             found.add(r["data_file"]["referenced_data_file"])
-        gspec = row.get("partition_spec_id", 0)
-        part_fields = _spec_partition_fields(meta, gspec)
-        blob = write_container(
-            manifest_entry_schema(part_fields, f"ret{snapshot_id}i{i}", v3=True),
-            records,
-        )
-        man_name = f"manifest-{snapshot_id}-retire{i}.avro"
-        with open(os.path.join(meta_dir, man_name), "wb") as f:
-            f.write(blob)
-        label = {1: "added", 0: "existing", 2: "deleted"}
-        counts = {
-            f"{k}_{u}_count": 0
-            for k in label.values()
-            for u in ("files", "rows")
-        }
-        for r in records:
-            counts[f"{label[r['status']]}_files_count"] += 1
-            counts[f"{label[r['status']]}_rows_count"] += r["data_file"]["record_count"]
-        row.update(
-            {
-                "manifest_path": f"{loc}/metadata/{man_name}",
-                "manifest_length": len(blob),
-                **counts,
-            }
+        rows[i] = _write_manifest(
+            meta, meta_dir, loc, f"manifest-{snapshot_id}-retire{i}.avro", records,
+            spec_id=row.get("partition_spec_id", 0), content=1,
+            sequence_number=row["sequence_number"],
+            added_snapshot_id=row["added_snapshot_id"],
+            suffix=f"ret{snapshot_id}i{i}",
         )
     missing = refs - found
     if missing:
@@ -509,17 +759,8 @@ def _commit_files(
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
     raw = json.loads(json.dumps(meta.raw))  # deep copy
-    loc = raw.get("location") or f"file://{os.path.dirname(base_dir)}"
-    table_root = base_dir if os.path.isdir(os.path.join(base_dir, "metadata")) else os.path.dirname(base_dir)
-    meta_dir = os.path.join(table_root, "metadata")
-
-    snaps = raw.get("snapshots", [])
-    parent_id = raw.get("current-snapshot-id")
-    if snapshot_id is None:
-        snapshot_id = max((s["snapshot-id"] for s in snaps), default=0) + 1
-    seq = raw.get("last-sequence-number", 0) + 1
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
+    loc, table_root, meta_dir = _table_dirs(raw, base_dir)
+    snapshot_id, seq, timestamp_ms = _next_ids(raw, snapshot_id, timestamp_ms)
     if spec_id is None:
         spec_id = raw.get("default-spec-id", 0)
 
@@ -541,252 +782,129 @@ def _commit_files(
         mc = 0 if fc == 0 else 1
         by_group.setdefault((mc, int(df.get("spec_id", spec_id))), []).append(df)
 
-    # v3 row lineage: every ADDED data file gets a first_row_id from
-    # the table's next-row-id counter; its rows' _row_id derive as
-    # first_row_id + position (spec v3 "Row Lineage"). Carried-
-    # forward EXISTING entries keep their original assignment.
-    lineage = int(raw.get("format-version", 2)) >= 3
-    row_counter = [int(raw.get("next-row-id", 0))]
-    snapshot_first_row_id = row_counter[0]
-
-    def _build_entries(group: list[dict[str, Any]], gspec: int):
-        part_fields = _spec_partition_fields(meta, gspec)
-        want_fields = {fn for fn, _ in part_fields}
-        entries, rows_count = [], 0
-        for df in group:
-            part = dict(df["partition"])
-            if set(part) != want_fields:
-                raise ValueError(
-                    f"partition {sorted(part)} does not match spec {gspec} "
-                    f"fields {sorted(want_fields)}"
-                )
-            local = df["path"] if os.path.isabs(df["path"]) else os.path.join(table_root, df["path"])
-            rel = os.path.relpath(local, table_root).replace(os.sep, "/")
-            file_format = df.get("file_format", "PARQUET")
-            record_count = df.get("record_count")
-            file_size = df.get("file_size_in_bytes")
-            if record_count is None:
-                if file_format != "PARQUET":
-                    raise ValueError(
-                        f"{rel}: non-parquet files must declare record_count "
-                        "(a deletion vector's is its cardinality)"
-                    )
-                import pyarrow.parquet as pq
-
-                record_count = pq.read_metadata(local).num_rows
-            if file_size is None:
-                file_size = os.path.getsize(local)
-            rows_count += record_count
-            first_row_id = df.get("first_row_id")
-            if lineage and int(df.get("content", 0)) == 0 and first_row_id is None:
-                first_row_id = row_counter[0]
-                row_counter[0] += record_count
-            elif lineage and first_row_id is not None:
-                # caller-assigned ids (e.g. a lineage-preserving
-                # replication carrying a foreign table's row ids):
-                # next-row-id must still end past every assigned id
-                row_counter[0] = max(
-                    row_counter[0], int(first_row_id) + record_count
-                )
-            entries.append(
-                {
-                    "status": ADDED,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,  # v2 inheritance
-                    "data_file": {
-                        "content": int(df.get("content", 0)),
-                        "first_row_id": first_row_id,
-                        "file_path": f"{loc}/{rel}",
-                        "file_format": file_format,
-                        "partition": part,
-                        "record_count": record_count,
-                        "file_size_in_bytes": file_size,
-                        # optional caller-supplied column stats:
-                        # [{"key": field_id, "value": bytes}] per the
-                        # v2 kv shape (sorted rewrites attach these
-                        # so plan_scan can prune by decoded bounds)
-                        "lower_bounds": df.get("lower_bounds"),
-                        "upper_bounds": df.get("upper_bounds"),
-                        "equality_ids": df.get("equality_ids"),
-                        "sort_order_id": df.get("sort_order_id"),
-                        # v3 deletion-vector locator (ignored by the
-                        # v2 entry schema; written when the group's
-                        # schema is v3)
-                        "referenced_data_file": df.get("referenced_data_file"),
-                        "content_offset": df.get("content_offset"),
-                        "content_size_in_bytes": df.get("content_size_in_bytes"),
-                    },
-                }
+    def _entry(df: dict[str, Any], want_fields: set[str], gspec: int) -> dict[str, Any]:
+        part = dict(df["partition"])
+        if set(part) != want_fields:
+            raise ValueError(
+                f"partition {sorted(part)} does not match spec {gspec} "
+                f"fields {sorted(want_fields)}"
             )
-        return part_fields, entries, rows_count
+        local = df["path"] if os.path.isabs(df["path"]) else os.path.join(table_root, df["path"])
+        rel = os.path.relpath(local, table_root).replace(os.sep, "/")
+        file_format = df.get("file_format", "PARQUET")
+        record_count = df.get("record_count")
+        file_size = df.get("file_size_in_bytes")
+        if record_count is None:
+            if file_format != "PARQUET":
+                raise ValueError(
+                    f"{rel}: non-parquet files must declare record_count "
+                    "(a deletion vector's is its cardinality)"
+                )
+            import pyarrow.parquet as pq
 
-    # ---- new manifest(s): parent manifest-list rows carried
-    # forward + one new row per spec group
+            record_count = pq.read_metadata(local).num_rows
+        if file_size is None:
+            file_size = os.path.getsize(local)
+        return {
+            "status": ADDED,
+            "snapshot_id": snapshot_id,
+            "sequence_number": None,  # v2 inheritance
+            "data_file": {
+                "content": int(df.get("content", 0)),
+                "first_row_id": df.get("first_row_id"),
+                "file_path": f"{loc}/{rel}",
+                "file_format": file_format,
+                "partition": part,
+                "record_count": record_count,
+                "file_size_in_bytes": file_size,
+                # optional caller-supplied column stats:
+                # [{"key": field_id, "value": bytes}] per the
+                # v2 kv shape (sorted rewrites attach these
+                # so plan_scan can prune by decoded bounds)
+                "lower_bounds": df.get("lower_bounds"),
+                "upper_bounds": df.get("upper_bounds"),
+                "equality_ids": df.get("equality_ids"),
+                "sort_order_id": df.get("sort_order_id"),
+                # v3 deletion-vector locator (written when the
+                # manifest holds a deletion vector)
+                "referenced_data_file": df.get("referenced_data_file"),
+                "content_offset": df.get("content_offset"),
+                "content_size_in_bytes": df.get("content_size_in_bytes"),
+            },
+        }
+
+    # ---- parent manifest-list rows carried forward + one new
+    # manifest per group. A REPLACE (the sorted rewrite's commit)
+    # supersedes every parent manifest: its files replace all live
+    # data, and every older delete file is left dangling.
     rows: list[dict] = []
-    if parent_id is not None:
-        parent = next(s for s in snaps if s["snapshot-id"] == parent_id)
+    parent_id = raw.get("current-snapshot-id")
+    if parent_id is not None and operation != "replace":
+        parent = next(s for s in raw["snapshots"] if s["snapshot-id"] == parent_id)
         rows.extend(read_manifest_list(_local(parent["manifest-list"], base_dir, loc)))
     if replace_dv_refs:
-        _retire_replaced_dvs(
-            rows, set(replace_dv_refs), meta, base_dir, loc, meta_dir, snapshot_id
-        )
+        _retire_replaced_dvs(rows, set(replace_dv_refs), meta, base_dir, snapshot_id)
+    # v3 row lineage: ADDED data files draw first_row_ids from the
+    # table's next-row-id counter; carried-forward EXISTING entries
+    # keep their original assignment
+    lineage = int(raw.get("format-version", 2)) >= 3
+    first_row_id = next_row_id = int(raw.get("next-row-id", 0))
     man_paths: list[str] = []
-    added_rows = 0
-    n_data_files = n_delete_files = 0
-    any_v3 = False
-    single = len(by_group) == 1
-    added_pos_deletes = added_eq_deletes = 0
+    added: list[dict[str, Any]] = []
     for (mc, gspec) in sorted(by_group):
-        part_fields, entries, rows_count = _build_entries(by_group[(mc, gspec)], gspec)
-        if mc == 0:
-            # "added-records" counts DATA rows only (Iceberg
-            # SnapshotSummary); delete-file rows go under the
-            # added-*-deletes keys below
-            added_rows += rows_count
-            n_data_files += len(entries)
-        else:
-            n_delete_files += len(entries)
-            for e in entries:
-                if e["data_file"]["content"] == 2:
-                    added_eq_deletes += e["data_file"]["record_count"]
-                else:
-                    added_pos_deletes += e["data_file"]["record_count"]
+        want_fields = {fn for fn, _ in _spec_partition_fields(meta, gspec)}
+        entries = [_entry(df, want_fields, gspec) for df in by_group[(mc, gspec)]]
+        if lineage and mc == 0:
+            next_row_id = _assign_row_ids(entries, next_row_id)
         man_name = (
             f"manifest-{snapshot_id}.avro"
-            if single
+            if len(by_group) == 1
             else f"manifest-{snapshot_id}-c{mc}s{gspec}.avro"
         )
-        group_v3 = any(
-            e["data_file"].get("referenced_data_file") is not None for e in entries
-        )
-        any_v3 = any_v3 or group_v3
-        man_blob = write_container(
-            manifest_entry_schema(
-                part_fields,
-                f"c{snapshot_id}m{mc}s{gspec}",
-                v3=group_v3,
-                lineage=lineage and mc == 0,
-            ),
-            entries,
-        )
-        with open(os.path.join(meta_dir, man_name), "wb") as f:
-            f.write(man_blob)
-        man_paths.append(os.path.join(meta_dir, man_name))
-
-        summaries = partition_summaries(entries, part_fields)
         rows.append(
-            {
-                "manifest_path": f"{loc}/metadata/{man_name}",
-                "manifest_length": len(man_blob),
-                "partition_spec_id": gspec,
-                "content": mc,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": rows_count,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": summaries,
-            }
+            _write_manifest(
+                meta, meta_dir, loc, man_name, entries,
+                spec_id=gspec, content=mc, sequence_number=seq,
+                added_snapshot_id=snapshot_id, suffix=f"c{snapshot_id}m{mc}s{gspec}",
+            )
         )
-    list_name = f"snap-{snapshot_id}.avro"
-    with open(os.path.join(meta_dir, list_name), "wb") as f:
-        f.write(write_container(MANIFEST_LIST_SCHEMA, rows))
+        man_paths.append(os.path.join(meta_dir, man_name))
+        added.extend(entries)
 
-    # ---- new metadata.json
-    if any_v3:
+    if any(e["data_file"]["referenced_data_file"] is not None for e in added):
         # deletion vectors are v3-only: committing one upgrades the
         # table's format version (the spec's supported v2 -> v3
         # upgrade path) so a spec-compliant reader knows to expect
         # DV manifest fields
         raw["format-version"] = max(int(raw.get("format-version", 2)), 3)
-    raw["last-sequence-number"] = seq
-    raw["last-updated-ms"] = timestamp_ms
-    if lineage and row_counter[0] != snapshot_first_row_id:
-        raw["next-row-id"] = row_counter[0]
-    if stage_ref is None:
-        raw["current-snapshot-id"] = snapshot_id
-    else:
-        # write-audit-publish staging: the snapshot exists (and is
-        # readable through its branch ref) but main does NOT move
-        # until publish_snapshot fast-forwards it
-        raw.setdefault("refs", {})[stage_ref] = {
-            "snapshot-id": snapshot_id, "type": "branch",
-        }
-    raw.setdefault("snapshots", []).append(
-        {
-            "sequence-number": seq,
-            "snapshot-id": snapshot_id,
-            **({"parent-snapshot-id": parent_id} if parent_id is not None else {}),
-            **(
-                {"first-row-id": snapshot_first_row_id}
-                if lineage and row_counter[0] != snapshot_first_row_id
-                else {}
-            ),
-            "timestamp-ms": timestamp_ms,
-            "summary": {
-                "operation": operation,
-                **({"added-data-files": str(n_data_files)} if n_data_files else {}),
-                **({"added-delete-files": str(n_delete_files)} if n_delete_files else {}),
-                **({"added-records": str(added_rows)} if n_data_files else {}),
-                **(
-                    {"added-position-deletes": str(added_pos_deletes)}
-                    if added_pos_deletes
-                    else {}
-                ),
-                **(
-                    {"added-equality-deletes": str(added_eq_deletes)}
-                    if added_eq_deletes
-                    else {}
-                ),
-                **_summary_totals(rows),
-                # caller-supplied summary properties (e.g. the
-                # streaming sink's exactly-once batch markers)
-                **(extra_summary or {}),
-            },
-            "manifest-list": f"{loc}/metadata/{list_name}",
-            "schema-id": raw.get("current-schema-id", 0),
-        }
-    )
-    if stage_ref is None:
-        raw.setdefault("snapshot-log", []).append(
-            {"timestamp-ms": timestamp_ms, "snapshot-id": snapshot_id}
-        )
-    raw.setdefault("metadata-log", []).append(
-        {"timestamp-ms": timestamp_ms,
-         "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc)}
-    )
-    # spec metadata-log retention: `write.metadata.previous-versions-max`
-    # caps the log on every commit; `write.metadata.delete-after-
-    # commit.enabled` also deletes the dropped vN.metadata.json files
-    props = raw.get("properties", {})
-    vmax = int(props.get("write.metadata.previous-versions-max", 0) or 0)
-    dropped_meta: list[dict] = []
-    if vmax > 0 and len(raw["metadata-log"]) > vmax:
-        dropped_meta = raw["metadata-log"][:-vmax]
-        raw["metadata-log"] = raw["metadata-log"][-vmax:]
-    new_path = _next_metadata_path(metadata_path, snapshot_id)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
-    if dropped_meta and props.get(
-        "write.metadata.delete-after-commit.enabled"
-    ) == "true":
-        for e in dropped_meta:
-            p = _local(e["metadata-file"], base_dir, loc)
-            if os.path.exists(p) and os.path.abspath(p) != os.path.abspath(new_path):
-                os.remove(p)
+    if next_row_id != first_row_id:
+        raw["next-row-id"] = next_row_id
 
-    return {
-        "metadata_path": new_path,
-        "snapshot_id": snapshot_id,
-        "sequence_number": seq,
-        "manifest_path": man_paths[0],
-        "manifest_paths": man_paths,
-        "manifest_list_path": os.path.join(meta_dir, list_name),
+    def _counts(kind: int) -> list[int]:
+        return [e["data_file"]["record_count"] for e in added if e["data_file"]["content"] == kind]
+
+    # "added-records" counts DATA rows only (Iceberg SnapshotSummary);
+    # delete-file rows go under the added-*-deletes keys
+    data, pos, eq = _counts(0), _counts(1), _counts(2)
+    summary = {
+        "operation": operation,
+        **({"added-data-files": str(len(data))} if data else {}),
+        **({"added-delete-files": str(len(pos) + len(eq))} if pos or eq else {}),
+        **({"added-records": str(sum(data))} if data else {}),
+        **({"added-position-deletes": str(sum(pos))} if sum(pos) else {}),
+        **({"added-equality-deletes": str(sum(eq))} if sum(eq) else {}),
     }
+    res = _commit_snapshot(
+        metadata_path, raw, rows,
+        base_dir=base_dir, snapshot_id=snapshot_id, sequence_number=seq,
+        timestamp_ms=timestamp_ms, summary=summary,
+        # caller-supplied summary properties (e.g. the streaming
+        # sink's exactly-once batch markers)
+        extra_summary=extra_summary,
+        stage_ref=stage_ref,
+        first_row_id=first_row_id if next_row_id != first_row_id else None,
+    )
+    return {**res, "manifest_path": man_paths[0], "manifest_paths": man_paths}
 
 
 # ----------------------------------------------- driver-gate queries
@@ -951,9 +1069,7 @@ def expire_snapshots(
             if timestamp_ms is None:
                 timestamp_ms = raw.get("last-updated-ms", 0) + 1000
             raw["last-updated-ms"] = timestamp_ms
-            new_path = _next_metadata_path(metadata_path, 0)
-            with open(new_path, "w") as f:
-                json.dump(raw, f, indent=2)
+            new_path = _write_metadata(metadata_path, raw)
             return {
                 "metadata_path": new_path, "expired": [], "removable": [],
                 "removed_refs": removed_refs,
@@ -1017,9 +1133,7 @@ def expire_snapshots(
             ),
         }
     )
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = _write_metadata(metadata_path, raw)
 
     if delete_files:
         for p in removable:
@@ -1183,9 +1297,7 @@ def commit_schema_update(
         {"timestamp-ms": timestamp_ms,
          "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc)}
     )
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = _write_metadata(metadata_path, raw)
     return {
         "metadata_path": new_path,
         "schema_id": new_schema_id,
@@ -1222,9 +1334,7 @@ def set_ref(
     if timestamp_ms is None:
         timestamp_ms = raw.get("last-updated-ms", 0) + 1000
     raw["last-updated-ms"] = timestamp_ms
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = _write_metadata(metadata_path, raw)
     return {"metadata_path": new_path, "name": name, "snapshot_id": snapshot_id}
 
 
@@ -1370,9 +1480,7 @@ def rollback_to(
     raw.setdefault("snapshot-log", []).append(
         {"timestamp-ms": timestamp_ms, "snapshot-id": snapshot_id}
     )
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = _write_metadata(metadata_path, raw)
     return {"metadata_path": new_path, "snapshot_id": snapshot_id}
 
 
@@ -1492,9 +1600,7 @@ def publish_snapshot(
     raw.setdefault("snapshot-log", []).append(
         {"timestamp-ms": timestamp_ms, "snapshot-id": sid}
     )
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = _write_metadata(metadata_path, raw)
     return {"metadata_path": new_path, "snapshot_id": sid}
 
 
@@ -1589,8 +1695,7 @@ def cherrypick_snapshot(
 
     Driver-side cost: the staged snapshot's own manifests (KB).
     """
-    from ..avro.reader import AvroContainerFile
-    from .snapshots import ancestor_chain, manifest_files_at, snapshot_by_id
+    from .snapshots import ancestor_chain, snapshot_by_id
 
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
@@ -1863,9 +1968,7 @@ def update_table_properties(
         {"timestamp-ms": timestamp_ms,
          "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc)}
     )
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = _write_metadata(metadata_path, raw)
     hint = os.path.join(os.path.dirname(new_path), "version-hint.text")
     if os.path.exists(hint):
         from .catalog import write_version_hint

@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .commit import _canonical_metadata_uri, _next_metadata_path
+from .commit import _canonical_metadata_uri, _write_metadata
 from .metadata import TableMetadata, parse_metadata
 
 __all__ = [
@@ -209,9 +209,7 @@ def evolve_schema(
             "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc),
         }
     )
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = _write_metadata(metadata_path, raw)
     return {
         "metadata_path": new_path,
         "schema_id": new_schema_id,
@@ -864,11 +862,7 @@ def evolve_partition_spec(
     if timestamp_ms is None:
         timestamp_ms = raw.get("last-updated-ms", 0) + 1000
     raw["last-updated-ms"] = timestamp_ms
-    from .commit import _next_metadata_path
-
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = _write_metadata(metadata_path, raw)
     return {"metadata_path": new_path, "spec_id": new_id}
 
 

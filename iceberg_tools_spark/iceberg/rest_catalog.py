@@ -685,9 +685,9 @@ def _apply_commit(
     failures are 409 (the spec's CommitFailedException), unsupported
     requirement/update kinds are 400 — never silently ignored."""
     import gzip
-    import re as _re
 
     from .catalog import current_metadata_path, write_version_hint
+    from .commit import _canonical_metadata_uri, _write_metadata
 
     mpath = current_metadata_path(warehouse, identifier)
     opener = gzip.open if mpath.endswith(".gz") else open
@@ -953,22 +953,13 @@ def _apply_commit(
     # were silently dropped from the history the FS commit path
     # records)
     raw["last-updated-ms"] = max(raw.get("last-updated-ms", 0), prev_ts + 1)
-    loc = raw.get("location")
-    table_root = os.path.dirname(os.path.dirname(mpath))
-    rel = os.path.relpath(mpath, table_root).replace(os.sep, "/")
     raw.setdefault("metadata-log", []).append({
         "timestamp-ms": prev_ts,
-        "metadata-file": f"{loc}/{rel}" if loc else mpath,
+        "metadata-file": _canonical_metadata_uri(
+            mpath, os.path.dirname(os.path.dirname(mpath)), raw.get("location")
+        ),
     })
-
-    m = _re.search(r"v(\d+)\.metadata\.json", os.path.basename(mpath))
-    nxt = os.path.join(
-        os.path.dirname(mpath), f"v{int(m.group(1)) + 1}.metadata.json"
-    )
-    tmp = nxt + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(raw, f, indent=2)
-    os.replace(tmp, nxt)
+    nxt = _write_metadata(mpath, raw)
     write_version_hint(nxt)
     return 200, {
         "metadata-location": f"file://{os.path.abspath(nxt)}",
@@ -1055,18 +1046,10 @@ def _apply_view_commit(
         else:
             return 400, {"error": {"message": (
                 f"unsupported view update action {a!r}"), "code": 400}}
-    import re as _re
-
-    m = _re.search(r"v(\d+)\.metadata\.json", os.path.basename(mpath))
-    nxt = os.path.join(
-        os.path.dirname(mpath), f"v{int(m.group(1)) + 1}.metadata.json"
-    )
-    tmp = nxt + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(raw, f, indent=2)
-    os.replace(tmp, nxt)
     from .catalog import write_version_hint
+    from .commit import _write_metadata
 
+    nxt = _write_metadata(mpath, raw)
     write_version_hint(nxt)
     return 200, {
         "metadata-location": f"file://{os.path.abspath(nxt)}",

@@ -36,16 +36,15 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..avro.reader import AvroContainerFile
-from ..avro.writer import write_container
 from .commit import (
-    MANIFEST_LIST_SCHEMA,
-    _next_metadata_path,
-    _spec_partition_fields,
-    manifest_entry_schema,
-    partition_summaries,
+    ADDED,
+    _assign_row_ids,
+    _carry_forward,
+    _commit_snapshot,
+    _next_ids,
+    _table_dirs,
+    _write_manifest,
 )
-from .commit import _summary_totals  # noqa: E402
 from .deletes import (
     EQUALITY_DELETES,
     POSITION_DELETES,
@@ -54,9 +53,6 @@ from .deletes import (
     mor_entries_at,
 )
 from .metadata import parse_metadata
-from .snapshots import _local, manifest_files_at, read_manifest_list
-
-ADDED, EXISTING, DELETED = 1, 0, 2
 
 
 def _plan_rewrite_targets(
@@ -305,14 +301,10 @@ def rewrite_data_files(
     replace snapshot. ``target_rels`` defaults to every data file
     with at least one applicable positional delete (the files
     ``delete_compaction_plan`` would flag at threshold 0)."""
-    import pyarrow.parquet as pq
-
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
-    raw = json.loads(json.dumps(meta.raw))
-    loc = raw.get("location")
-    table_root = base_dir if os.path.isdir(os.path.join(base_dir, "metadata")) else os.path.dirname(base_dir)
-    meta_dir = os.path.join(table_root, "metadata")
+    raw = meta.raw
+    loc, table_root, _ = _table_dirs(raw, base_dir)
 
     parent_id = raw.get("current-snapshot-id")
     data, dels = mor_entries_at(meta, parent_id, base_dir)
@@ -326,11 +318,7 @@ def rewrite_data_files(
     if missing:
         raise ValueError(f"target files not live at snapshot {parent_id}: {sorted(missing)}")
 
-    if snapshot_id is None:
-        snapshot_id = max(s["snapshot-id"] for s in raw["snapshots"]) + 1
-    seq = raw.get("last-sequence-number", 0) + 1
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
+    snapshot_id, _, timestamp_ms = _next_ids(raw, snapshot_id, timestamp_ms)
 
     # ---- fold + write ALL replacement files in one Spark job
     new_paths = _fold_and_write(
@@ -341,235 +329,104 @@ def rewrite_data_files(
     new_entries = []
     for rel, e in sorted(targets.items()):
         stem, ext = os.path.splitext(rel)
-        new_rel = f"{stem}-rw{snapshot_id}{ext}"
-        out_path = new_paths[rel]
-        spec_fields = _spec_partition_fields(meta, e["spec_id"])
         new_entries.append(
             {
                 "spec_id": e["spec_id"],
-                "spec_fields": spec_fields,
-                "entry": {
-                    "status": ADDED,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,  # inherit new seq
-                    "data_file": {
-                        "content": 0,
-                        "file_path": f"{loc}/{new_rel}",
-                        "file_format": "PARQUET",
-                        "partition": e["partition"],
-                        "record_count": pq.read_metadata(out_path).num_rows,
-                        "file_size_in_bytes": os.path.getsize(out_path),
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                        "equality_ids": None,
-                        "sort_order_id": None,
-                    },
-                },
+                "entry": _added_entry(
+                    snapshot_id, loc, f"{stem}-rw{snapshot_id}{ext}",
+                    e["partition"], new_paths[rel],
+                ),
             }
         )
 
     return _replace_commit(
-        metadata_path, meta, raw, base_dir, targets, new_entries,
-        snapshot_id, seq, timestamp_ms,
+        metadata_path, meta, base_dir, targets, new_entries,
+        snapshot_id=snapshot_id, timestamp_ms=timestamp_ms,
     )
+
+
+def _added_entry(
+    snapshot_id: int, loc: str, rel: str, partition: dict[str, Any], path: str
+) -> dict[str, Any]:
+    """ADDED manifest entry for a data file a rewrite just wrote at
+    ``path`` (table-relative ``rel``): record count from the parquet
+    footer, sequence number inherited from the replace snapshot."""
+    import pyarrow.parquet as pq
+
+    return {
+        "status": ADDED,
+        "snapshot_id": snapshot_id,
+        "sequence_number": None,
+        "data_file": {
+            "content": 0,
+            "file_path": f"{loc}/{rel}",
+            "file_format": "PARQUET",
+            "partition": partition,
+            "record_count": pq.read_metadata(path).num_rows,
+            "file_size_in_bytes": os.path.getsize(path),
+        },
+    }
 
 
 def _replace_commit(
     metadata_path: str,
     meta,
-    raw: dict,
     base_dir: str,
     targets: dict[str, dict[str, Any]],
     new_entries: list[dict[str, Any]],
+    *,
     snapshot_id: int,
-    seq: int,
     timestamp_ms: int,
     extra_summary: dict[str, str] | None = None,
 ) -> dict[str, Any]:
     """REPLACE-snapshot commit shared by the delete-folding rewrite
     and the binpack compactor: drop ``targets`` from the live set
     (untouched manifests carried forward VERBATIM, touched ones
-    rebuilt with EXISTING survivors), add ``new_entries`` in fresh
-    ADDED manifests, write manifest list + metadata.json."""
-    loc = raw.get("location")
-    table_root = base_dir if os.path.isdir(os.path.join(base_dir, "metadata")) else os.path.dirname(base_dir)
-    meta_dir = os.path.join(table_root, "metadata")
-    parent_id = raw.get("current-snapshot-id")
-    # v3 row lineage (r15 — found by the row-tracking bridge): a
-    # rebuilt manifest's EXISTING survivors must keep their
-    # first_row_id (dropping it silently nulls _row_id after any
-    # compaction), and new ADDED entries get fresh ids from
-    # next-row-id unless the caller assigned them
+    rebuilt with EXISTING survivors), add ``new_entries``
+    (``{"spec_id", "entry"}``) in fresh ADDED manifests, one per
+    spec, and commit the snapshot."""
+    raw = json.loads(json.dumps(meta.raw))
+    loc, _, meta_dir = _table_dirs(raw, base_dir)
+    seq = raw.get("last-sequence-number", 0) + 1
+    replaced = {t["file_path"] for t in targets.values()}
+    rows = _carry_forward(
+        meta, base_dir, snapshot_id,
+        content=0, drop=lambda df: df["file_path"] in replaced, tag="rw",
+    )
+    # v3 row lineage (r15 — found by the row-tracking bridge): the
+    # rebuilt manifests' EXISTING survivors keep their first_row_id
+    # (dropping it silently nulls _row_id after any compaction), and
+    # new ADDED entries get fresh ids unless the caller assigned them
     lineage = int(raw.get("format-version", 2)) >= 3
-    row_counter = int(raw.get("next-row-id", 0))
-
-    # ---- parent manifests: carry untouched ones forward VERBATIM
-    # (their list rows re-used as-is — zero Avro churn, stable
-    # names); only manifests actually containing a replaced file
-    # are rebuilt without it
-    replaced_paths = {targets[r]["file_path"] for r in targets}
-    parent = next(s for s in raw["snapshots"] if s["snapshot-id"] == parent_id)
-    parent_rows = {
-        r["manifest_path"]: r
-        for r in read_manifest_list(_local(parent["manifest-list"], base_dir, loc))
-    }
-    list_rows: list[dict] = []
-    for mrow in manifest_files_at(meta, parent_id, base_dir):
-        if mrow.get("content", 0) == 1:
-            # delete manifest: carry forward verbatim
-            list_rows.append(parent_rows[mrow["manifest_path"]])
-            continue
-        with open(mrow["local_path"], "rb") as f:
-            records = list(AvroContainerFile(f.read()))
-        if not any(
-            rec["data_file"]["file_path"] in replaced_paths for rec in records
-        ):
-            list_rows.append(parent_rows[mrow["manifest_path"]])
-            continue
-        kept = []
-        for rec in records:
-            if rec["status"] == DELETED:
-                continue
-            if rec["data_file"]["file_path"] in replaced_paths:
-                continue
-            eseq = rec.get("sequence_number")
-            if eseq is None:
-                eseq = mrow.get("sequence_number", 0)
-            sid = rec.get("snapshot_id")
-            if sid is None:
-                sid = mrow.get("added_snapshot_id")
-            kept.append(
-                {
-                    "status": EXISTING,
-                    "snapshot_id": sid,
-                    "sequence_number": eseq,
-                    "data_file": rec["data_file"],
-                }
-            )
-        if not kept:
-            continue  # manifest fully replaced: drop it
-        spec_id = mrow.get("partition_spec_id", 0)
-        spec_fields = _spec_partition_fields(meta, spec_id)
-        name = os.path.basename(mrow["local_path"]).rsplit(".", 1)[0]
-        new_name = f"{name}-rw{snapshot_id}.avro"
-        blob = write_container(
-            manifest_entry_schema(
-                spec_fields, f"rw{snapshot_id}_{name}", lineage=lineage
-            ),
-            kept,
-        )
-        with open(os.path.join(meta_dir, new_name), "wb") as f:
-            f.write(blob)
-        list_rows.append(
-            {
-                "manifest_path": f"{loc}/metadata/{new_name}",
-                "manifest_length": len(blob),
-                "partition_spec_id": spec_id,
-                "content": 0,
-                "sequence_number": mrow.get("sequence_number", 0),
-                "min_sequence_number": min(e["sequence_number"] for e in kept),
-                "added_snapshot_id": mrow.get("added_snapshot_id", parent_id),
-                "added_files_count": 0,
-                "existing_files_count": len(kept),
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": sum(e["data_file"]["record_count"] for e in kept),
-                "deleted_rows_count": 0,
-                "partitions": partition_summaries(kept, spec_fields),
-            }
-        )
-
-    # ---- the new ADDED manifest(s): one per spec among rewritten files
+    next_row_id = int(raw.get("next-row-id", 0))
     by_spec: dict[int, list[dict]] = {}
     for ne in new_entries:
-        by_spec.setdefault(ne["spec_id"], []).append(ne)
-    for spec_id, group in sorted(by_spec.items()):
-        name = f"manifest-rw{snapshot_id}-s{spec_id}.avro"
+        by_spec.setdefault(ne["spec_id"], []).append(ne["entry"])
+    for spec_id, entries in sorted(by_spec.items()):
         if lineage:
-            for g in group:
-                df_ = g["entry"]["data_file"]
-                if df_.get("first_row_id") is None:
-                    df_["first_row_id"] = row_counter
-                    row_counter += int(df_.get("record_count") or 0)
-                else:
-                    row_counter = max(
-                        row_counter,
-                        int(df_["first_row_id"])
-                        + int(df_.get("record_count") or 0),
-                    )
-        blob = write_container(
-            manifest_entry_schema(
-                group[0]["spec_fields"],
-                f"rwnew{snapshot_id}_{spec_id}",
-                lineage=lineage,
-            ),
-            [g["entry"] for g in group],
+            next_row_id = _assign_row_ids(entries, next_row_id)
+        rows.append(
+            _write_manifest(
+                meta, meta_dir, loc, f"manifest-rw{snapshot_id}-s{spec_id}.avro", entries,
+                spec_id=spec_id, content=0, sequence_number=seq,
+                added_snapshot_id=snapshot_id, suffix=f"rwnew{snapshot_id}_{spec_id}",
+            )
         )
-        with open(os.path.join(meta_dir, name), "wb") as f:
-            f.write(blob)
-        list_rows.append(
-            {
-                "manifest_path": f"{loc}/metadata/{name}",
-                "manifest_length": len(blob),
-                "partition_spec_id": spec_id,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(group),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(g["entry"]["data_file"]["record_count"] for g in group),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": partition_summaries(
-                    [g["entry"] for g in group], group[0]["spec_fields"]
-                ),
-            }
-        )
-
-    list_name = f"snap-{snapshot_id}.avro"
-    with open(os.path.join(meta_dir, list_name), "wb") as f:
-        f.write(write_container(MANIFEST_LIST_SCHEMA, list_rows))
-
-    # ---- metadata.json
-    raw["last-sequence-number"] = seq
-    raw["last-updated-ms"] = timestamp_ms
-    if lineage and row_counter != int(raw.get("next-row-id", 0)):
-        raw["next-row-id"] = row_counter
-    raw["current-snapshot-id"] = snapshot_id
-    raw["snapshots"].append(
-        {
-            "sequence-number": seq,
-            "snapshot-id": snapshot_id,
-            "parent-snapshot-id": parent_id,
-            "timestamp-ms": timestamp_ms,
-            "summary": {
-                "operation": "replace",
-                "rewritten-data-files": str(len(targets)),
-                "added-data-files": str(len(new_entries)),
-                **_summary_totals(list_rows),
-                **(extra_summary or {}),
-            },
-            "manifest-list": f"{loc}/metadata/{list_name}",
-            "schema-id": raw.get("current-schema-id", 0),
-        }
+    if next_row_id != int(raw.get("next-row-id", 0)):
+        raw["next-row-id"] = next_row_id
+    res = _commit_snapshot(
+        metadata_path, raw, rows,
+        base_dir=base_dir, snapshot_id=snapshot_id, sequence_number=seq,
+        timestamp_ms=timestamp_ms,
+        summary={
+            "operation": "replace",
+            "rewritten-data-files": str(len(targets)),
+            "added-data-files": str(len(new_entries)),
+        },
+        extra_summary=extra_summary,
     )
-    raw.setdefault("snapshot-log", []).append(
-        {"timestamp-ms": timestamp_ms, "snapshot-id": snapshot_id}
-    )
-    from .commit import _canonical_metadata_uri
-
-    raw.setdefault("metadata-log", []).append(
-        {"timestamp-ms": timestamp_ms,
-         "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc)}
-    )
-    new_path = _next_metadata_path(metadata_path, snapshot_id)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
-
     return {
-        "metadata_path": new_path,
+        "metadata_path": res["metadata_path"],
         "snapshot_id": snapshot_id,
         "sequence_number": seq,
         "rewritten": sorted(targets),
@@ -651,11 +508,8 @@ def binpack_rewrite(
     """
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
-    raw = json.loads(json.dumps(meta.raw))
-    loc = raw.get("location")
-    table_root = base_dir if os.path.isdir(os.path.join(base_dir, "metadata")) else os.path.dirname(base_dir)
-    parent_id = raw.get("current-snapshot-id")
-    data, dels = mor_entries_at(meta, parent_id, base_dir)
+    loc, table_root, _ = _table_dirs(meta.raw, base_dir)
+    data, dels = mor_entries_at(meta, meta.current_snapshot_id, base_dir)
 
     delete_bearing = set(_plan_rewrite_targets(spark, data, dels)) if dels else set()
     delete_bearing |= _equality_affected(data, dels)
@@ -694,11 +548,7 @@ def binpack_rewrite(
             f"{min_group_files}+ sub-target delete-free files)"
         )
 
-    if snapshot_id is None:
-        snapshot_id = max(s["snapshot-id"] for s in raw["snapshots"]) + 1
-    seq = raw.get("last-sequence-number", 0) + 1
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
+    snapshot_id, _, timestamp_ms = _next_ids(meta.raw, snapshot_id, timestamp_ms)
 
     # ---- ONE Spark job: scan all packed files, shuffle each row to
     # its group token, one output file per group. The scan projects
@@ -735,53 +585,29 @@ def binpack_rewrite(
         .parquet(tmp)
     )
 
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
     new_entries = []
     targets: dict[str, dict[str, Any]] = {}
     for gi, g in enumerate(groups):
-        parts = _glob.glob(os.path.join(tmp, f"_bp={gi}", "*.parquet"))
+        parts = glob.glob(os.path.join(tmp, f"_bp={gi}", "*.parquet"))
         if len(parts) != 1:
             raise RuntimeError(f"group {gi}: expected 1 part file, got {len(parts)}")
         new_rel = f"data/binpack-{snapshot_id}-g{gi:04d}.parquet"
         dst = os.path.join(table_root, new_rel)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.replace(parts[0], dst)
-        spec_id = g[0]["spec_id"]
         new_entries.append(
             {
-                "spec_id": spec_id,
-                "spec_fields": _spec_partition_fields(meta, spec_id),
-                "entry": {
-                    "status": ADDED,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": f"{loc}/{new_rel}",
-                        "file_format": "PARQUET",
-                        "partition": g[0]["partition"],
-                        "record_count": pq.read_metadata(dst).num_rows,
-                        "file_size_in_bytes": os.path.getsize(dst),
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                        "equality_ids": None,
-                        "sort_order_id": None,
-                    },
-                },
+                "spec_id": g[0]["spec_id"],
+                "entry": _added_entry(snapshot_id, loc, new_rel, g[0]["partition"], dst),
             }
         )
         for e in g:
             targets[e["rel"]] = e
-    import shutil as _shutil
-
-    _shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)
 
     res = _replace_commit(
-        metadata_path, meta, raw, base_dir, targets, new_entries,
-        snapshot_id, seq, timestamp_ms,
+        metadata_path, meta, base_dir, targets, new_entries,
+        snapshot_id=snapshot_id, timestamp_ms=timestamp_ms,
         extra_summary={"compacted-groups": str(len(groups))},
     )
     res["groups"] = [sorted(e["rel"] for e in g) for g in groups]

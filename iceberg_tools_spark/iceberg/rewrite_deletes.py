@@ -38,22 +38,17 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..avro.reader import AvroContainerFile
-from ..avro.writer import write_container
 from .commit import (
-    MANIFEST_LIST_SCHEMA,
-    _next_metadata_path,
-    _spec_partition_fields,
-    manifest_entry_schema,
-    partition_summaries,
+    ADDED,
+    _carry_forward,
+    _commit_snapshot,
+    _next_ids,
+    _table_dirs,
+    _write_manifest,
 )
-from .commit import _summary_totals  # noqa: E402
 from .deletes import EQUALITY_DELETES, POSITION_DELETES, _is_dv, mor_entries_at
 from .metadata import parse_metadata
 from .rewrite_data import _write_single_parquet
-from .snapshots import _local, manifest_files_at, read_manifest_list
-
-ADDED, EXISTING, DELETED = 1, 0, 2
 
 
 def rewrite_position_deletes(
@@ -70,13 +65,7 @@ def rewrite_position_deletes(
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
     raw = json.loads(json.dumps(meta.raw))
-    loc = raw.get("location")
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
-    meta_dir = os.path.join(table_root, "metadata")
+    loc, table_root, meta_dir = _table_dirs(raw, base_dir)
 
     parent_id = raw.get("current-snapshot-id")
     data, dels = mor_entries_at(meta, parent_id, base_dir)
@@ -95,11 +84,7 @@ def rewrite_position_deletes(
 
     live_rels = sorted({e["rel"] for e in data})
 
-    if snapshot_id is None:
-        snapshot_id = max(s["snapshot-id"] for s in raw["snapshots"]) + 1
-    seq = raw.get("last-sequence-number", 0) + 1
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
+    snapshot_id, seq, timestamp_ms = _next_ids(raw, snapshot_id, timestamp_ms)
 
     # ---- merge groups: (spec, partition, preserved data seq)
     groups: dict[tuple[int, str, int], list[dict]] = {}
@@ -154,174 +139,46 @@ def rewrite_position_deletes(
                         "partition": json.loads(pjson),
                         "record_count": n,
                         "file_size_in_bytes": os.path.getsize(out_path),
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                        "equality_ids": None,
-                        "sort_order_id": None,
                     },
                 },
             }
         )
 
     # ---- manifest list: data manifests verbatim; delete manifests
-    # rebuilt keeping ONLY equality entries (as EXISTING, explicit
-    # seqs); one new delete manifest per spec for the compacted files
-    parent = next(s for s in raw["snapshots"] if s["snapshot-id"] == parent_id)
-    parent_rows = {
-        r["manifest_path"]: r
-        for r in read_manifest_list(_local(parent["manifest-list"], base_dir, loc))
-    }
-    list_rows: list[dict] = []
-    for mrow in manifest_files_at(meta, parent_id, base_dir):
-        if mrow.get("content", 0) == 0:
-            list_rows.append(parent_rows[mrow["manifest_path"]])
-            continue
-        with open(mrow["local_path"], "rb") as f:
-            records = list(AvroContainerFile(f.read()))
-        kept = []
-        for rec in records:
-            if rec["status"] == DELETED:
-                continue
-            df_ = rec["data_file"]
-            if df_.get("content") != EQUALITY_DELETES and not (
-                (df_.get("file_format") or "").upper() == "PUFFIN"
-            ):
-                continue  # parquet positional: replaced by the
-                # compacted files; equality AND v3 deletion-vector
-                # entries carry forward (vectors were excluded from
-                # compaction — dropping them here would resurrect
-                # their deleted rows)
-            eseq = rec.get("sequence_number")
-            if eseq is None:
-                eseq = mrow.get("sequence_number", 0)
-            sid = rec.get("snapshot_id")
-            if sid is None:
-                sid = mrow.get("added_snapshot_id")
-            kept.append(
-                {
-                    "status": EXISTING,
-                    "snapshot_id": sid,
-                    "sequence_number": eseq,
-                    "data_file": rec["data_file"],
-                }
-            )
-        if not kept:
-            continue  # all-positional delete manifest: fully replaced
-        spec_id = mrow.get("partition_spec_id", 0)
-        spec_fields = _spec_partition_fields(meta, spec_id)
-        name = os.path.basename(mrow["local_path"]).rsplit(".", 1)[0]
-        new_name = f"{name}-eq{snapshot_id}.avro"
-        blob = write_container(
-            manifest_entry_schema(
-                spec_fields,
-                f"eq{snapshot_id}_{name}",
-                v3=any(
-                    e["data_file"].get("referenced_data_file") is not None
-                    for e in kept
-                ),
-            ),
-            kept,
-        )
-        with open(os.path.join(meta_dir, new_name), "wb") as f:
-            f.write(blob)
-        list_rows.append(
-            {
-                "manifest_path": f"{loc}/metadata/{new_name}",
-                "manifest_length": len(blob),
-                "partition_spec_id": spec_id,
-                "content": 1,
-                "sequence_number": mrow.get("sequence_number", 0),
-                "min_sequence_number": min(e["sequence_number"] for e in kept),
-                "added_snapshot_id": mrow.get("added_snapshot_id", parent_id),
-                "added_files_count": 0,
-                "existing_files_count": len(kept),
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": sum(
-                    e["data_file"]["record_count"] for e in kept
-                ),
-                "deleted_rows_count": 0,
-                "partitions": partition_summaries(kept, spec_fields),
-            }
-        )
-
+    # rebuilt without their parquet positional entries (equality and
+    # v3 deletion-vector entries carry forward as EXISTING — vectors
+    # were excluded from compaction, dropping them would resurrect
+    # their deleted rows); one new delete manifest per spec for the
+    # compacted files
+    rows = _carry_forward(
+        meta, base_dir, snapshot_id, content=1, tag="eq",
+        drop=lambda df: df.get("content") != EQUALITY_DELETES
+        and (df.get("file_format") or "").upper() != "PUFFIN",
+    )
     by_spec: dict[int, list[dict]] = {}
     for ne in new_delete_entries:
-        by_spec.setdefault(ne["spec_id"], []).append(ne)
-    for spec_id, group in sorted(by_spec.items()):
-        spec_fields = _spec_partition_fields(meta, spec_id)
-        name = f"manifest-pdrw{snapshot_id}-s{spec_id}.avro"
-        blob = write_container(
-            manifest_entry_schema(spec_fields, f"pdrw{snapshot_id}_{spec_id}"),
-            [g["entry"] for g in group],
+        by_spec.setdefault(ne["spec_id"], []).append(ne["entry"])
+    for spec_id, entries in sorted(by_spec.items()):
+        rows.append(
+            _write_manifest(
+                meta, meta_dir, loc, f"manifest-pdrw{snapshot_id}-s{spec_id}.avro", entries,
+                spec_id=spec_id, content=1, sequence_number=seq,
+                added_snapshot_id=snapshot_id, suffix=f"pdrw{snapshot_id}_{spec_id}",
+            )
         )
-        with open(os.path.join(meta_dir, name), "wb") as f:
-            f.write(blob)
-        list_rows.append(
-            {
-                "manifest_path": f"{loc}/metadata/{name}",
-                "manifest_length": len(blob),
-                "partition_spec_id": spec_id,
-                "content": 1,
-                "sequence_number": seq,
-                "min_sequence_number": min(
-                    g["entry"]["sequence_number"] for g in group
-                ),
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(group),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    g["entry"]["data_file"]["record_count"] for g in group
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": partition_summaries(
-                    [g["entry"] for g in group], spec_fields
-                ),
-            }
-        )
-
-    list_name = f"snap-{snapshot_id}.avro"
-    with open(os.path.join(meta_dir, list_name), "wb") as f:
-        f.write(write_container(MANIFEST_LIST_SCHEMA, list_rows))
-
-    raw["last-sequence-number"] = seq
-    raw["last-updated-ms"] = timestamp_ms
-    raw["current-snapshot-id"] = snapshot_id
-    raw["snapshots"].append(
-        {
-            "sequence-number": seq,
-            "snapshot-id": snapshot_id,
-            "parent-snapshot-id": parent_id,
-            "timestamp-ms": timestamp_ms,
-            "summary": {
-                "operation": "replace",
-                "removed-delete-files": str(len(pos_dels)),
-                "added-delete-files": str(len(new_delete_entries)),
-                "removed-position-delete-rows": str(rows_before - rows_after),
-                **_summary_totals(list_rows),
-            },
-            "manifest-list": f"{loc}/metadata/{list_name}",
-            "schema-id": raw.get("current-schema-id", 0),
-        }
+    res = _commit_snapshot(
+        metadata_path, raw, rows,
+        base_dir=base_dir, snapshot_id=snapshot_id, sequence_number=seq,
+        timestamp_ms=timestamp_ms,
+        summary={
+            "operation": "replace",
+            "removed-delete-files": str(len(pos_dels)),
+            "added-delete-files": str(len(new_delete_entries)),
+            "removed-position-delete-rows": str(rows_before - rows_after),
+        },
     )
-    raw.setdefault("snapshot-log", []).append(
-        {"timestamp-ms": timestamp_ms, "snapshot-id": snapshot_id}
-    )
-    from .commit import _canonical_metadata_uri
-
-    raw.setdefault("metadata-log", []).append(
-        {
-            "timestamp-ms": timestamp_ms,
-            "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc),
-        }
-    )
-    new_path = _next_metadata_path(metadata_path, snapshot_id)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
     return {
-        "metadata_path": new_path,
+        "metadata_path": res["metadata_path"],
         "snapshot_id": snapshot_id,
         "removed_files": len(pos_dels),
         "added_files": len(new_delete_entries),

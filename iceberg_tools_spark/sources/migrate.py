@@ -1542,7 +1542,7 @@ def replicate_delta_versions(
     from ..iceberg.commit import append_snapshot
     from ..iceberg.deletes import mor_entries_at
     from ..iceberg.metadata import parse_metadata
-    from ..iceberg.rewrite_data import _replace_commit
+    from ..iceberg.rewrite_data import _added_entry, _replace_commit
     from .delta_log import (
         _column_mapping,
         check_reader_support,
@@ -1822,8 +1822,7 @@ def replicate_delta_versions(
             seq_of_version[v] = len(seq_of_version) + 1
         if removes:
             imeta = parse_metadata(mp)
-            raw = json.loads(json.dumps(imeta.raw))
-            data, _dels = mor_entries_at(imeta, raw["current-snapshot-id"],
+            data, _dels = mor_entries_at(imeta, imeta.current_snapshot_id,
                                          os.path.dirname(mp))
             by_rel = {e["rel"]: e for e in data}
             targets = {}
@@ -1837,32 +1836,16 @@ def replicate_delta_versions(
             new_entries = []
             for a in adds:
                 e = _copy_add(a, v)
-                local = os.path.join(target_root, e["path"])
                 new_entries.append({
                     "spec_id": 0,
-                    "spec_fields": _spec_fields_of(imeta),
-                    "entry": {
-                        "status": 1,
-                        "snapshot_id": sid,
-                        "sequence_number": None,
-                        "data_file": {
-                            "content": 0,
-                            "file_path": f"{raw['location']}/{e['path']}",
-                            "file_format": "PARQUET",
-                            "partition": e["partition"],
-                            "record_count": _pq.read_metadata(local).num_rows,
-                            "file_size_in_bytes": os.path.getsize(local),
-                            "lower_bounds": None,
-                            "upper_bounds": None,
-                            "equality_ids": None,
-                            "sort_order_id": None,
-                        },
-                    },
+                    "entry": _added_entry(
+                        sid, imeta.raw["location"], e["path"], e["partition"],
+                        os.path.join(target_root, e["path"]),
+                    ),
                 })
-            seq = raw.get("last-sequence-number", 0) + 1
             res = _replace_commit(
-                mp, imeta, raw, os.path.dirname(mp), targets, new_entries,
-                sid, seq, ts, extra_summary=summary,
+                mp, imeta, os.path.dirname(mp), targets, new_entries,
+                snapshot_id=sid, timestamp_ms=ts, extra_summary=summary,
             )
             mp = res["metadata_path"]
             n_removed += len(targets)
@@ -1879,12 +1862,6 @@ def replicate_delta_versions(
         "n_removed_files": n_removed,
         "head_delta_version": head,
     }
-
-
-def _spec_fields_of(meta) -> list[tuple[str, int, str, str]]:
-    from ..iceberg.commit import _spec_partition_fields
-
-    return _spec_partition_fields(meta, meta.raw.get("default-spec-id", 0))
 
 
 def delta_replicate_full_rows(spark: SparkSession, sf_dir: str):

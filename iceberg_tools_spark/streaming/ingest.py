@@ -43,7 +43,7 @@ STREAM_BATCH_PROP = "streaming-batch-id"
 
 def latest_metadata_path(metadata_path: str) -> str:
     """The table's CURRENT metadata file: the highest ``vN`` sibling
-    of ``metadata_path`` (the chain ``_next_metadata_path`` writes).
+    of ``metadata_path`` (the chain ``commit._write_metadata`` writes).
     Non-versioned layouts return the given path unchanged."""
     d, base = os.path.dirname(metadata_path), os.path.basename(metadata_path)
     if not re.fullmatch(r"v(\d+)\.metadata\.json", base):

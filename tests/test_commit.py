@@ -10,6 +10,7 @@ writer's own eyes."""
 from __future__ import annotations
 
 import os
+import pathlib
 import shutil
 
 import pyarrow as pa
@@ -878,3 +879,167 @@ def test_update_table_properties_roundtrip(spark, tmp_path):
 
     with pytest.raises(ValueError, match="no changes"):
         update_table_properties(r2["metadata_path"])
+
+
+# ------------------------------------------- one commit protocol
+
+
+def test_rewrite_position_deletes_honours_metadata_log_retention(spark, tmp_path):
+    """Rewrites commit through the same tail as appends: the
+    metadata-log is capped at previous-versions-max and the dropped
+    version file is deleted."""
+    import json
+
+    from iceberg_tools_spark.iceberg.commit import update_table_properties
+    from iceberg_tools_spark.iceberg.rewrite_deletes import rewrite_position_deletes
+
+    root = _scratch_mor(tmp_path)
+    first = str(root / "v2.metadata.json")
+    mp = update_table_properties(first, set_props={
+        "write.metadata.previous-versions-max": "1",
+        "write.metadata.delete-after-commit.enabled": "true",
+    })["metadata_path"]
+    res = rewrite_position_deletes(spark, mp)
+    log = json.load(open(res["metadata_path"]))["metadata-log"]
+    assert len(log) <= 1
+    assert [e["metadata-file"].rsplit("/", 1)[-1] for e in log] == ["v3.metadata.json"]
+    assert not os.path.exists(first)
+    assert os.path.exists(mp)
+
+
+def test_failed_metadata_write_leaves_previous_version(tmp_path):
+    """A commit whose metadata.json cannot be serialized raises and
+    leaves no partial next version: the catalog still resolves the
+    previous one."""
+    import glob
+
+    from iceberg_tools_spark.iceberg.catalog import current_metadata_path
+    from iceberg_tools_spark.iceberg.commit import create_table
+
+    wh = str(tmp_path / "wh")
+    root = os.path.join(wh, "db", "t")
+    os.makedirs(root)
+    mp = create_table(root, [("id", "long")])
+    pq.write_table(pa.table({"id": pa.array([1, 2], pa.int64())}), os.path.join(root, "data", "a.parquet"))
+    with pytest.raises(TypeError):
+        append_snapshot(mp, [{"path": "data/a.parquet", "partition": {}}], extra_summary={"k": b"x"})
+    mdir = os.path.join(root, "metadata")
+    assert glob.glob(os.path.join(mdir, "v*.metadata.json")) == [mp]
+    assert not glob.glob(os.path.join(mdir, "*.tmp"))
+    assert current_metadata_path(wh, "db.t") == mp
+
+
+def _dv_replace(spark, root):
+    from iceberg_tools_spark.iceberg.dml import delete_where_dv
+
+    return delete_where_dv(spark, os.path.join(root, "v3.metadata.json"), "id % 50 = 0")
+
+
+def _binpack(spark, root):
+    from iceberg_tools_spark.iceberg.rewrite_data import binpack_rewrite
+
+    mp = os.path.join(root, "v2.metadata.json")
+    for i in range(2):
+        _write_rows(pathlib.Path(root), f"data/category=w/S{i}.parquet", [900 + i], "w")
+        mp = append_snapshot(mp, [{"path": f"data/category=w/S{i}.parquet",
+                                   "partition": {"category": "w", "id_trunc": 900}}])["metadata_path"]
+    return binpack_rewrite(spark, mp, target_size_bytes=1 << 20)
+
+
+def _pos_delete_b(root):
+    from iceberg_tools_spark.iceberg.commit import write_position_deletes
+
+    rel = write_position_deletes(root, "data/deletes/pd_b.parquet", [("data/category=y/B.parquet", 0)])
+    return {"path": rel, "partition": {"category": "y"}, "content": 1, "spec_id": 0}
+
+
+def _rewrite_sorted(spark, root):
+    from iceberg_tools_spark.iceberg.sortorder import commit_sort_order, rewrite_sorted
+
+    mp = commit_sort_order(os.path.join(root, "v2.metadata.json"), [("id", "asc")])["metadata_path"]
+    return rewrite_sorted(spark, mp, target_files=2)
+
+
+def _rewrite_position_deletes(spark, root):
+    from iceberg_tools_spark.iceberg.rewrite_data import rewrite_data_files
+    from iceberg_tools_spark.iceberg.rewrite_deletes import rewrite_position_deletes
+
+    mp = os.path.join(root, "v2.metadata.json")
+    r1 = rewrite_data_files(spark, mp, target_rels=["data/category=x/A.parquet"])
+    return rewrite_position_deletes(spark, r1["metadata_path"])
+
+
+def _commit_kinds():
+    from iceberg_tools_spark.iceberg.commit import commit_delete_snapshot, commit_row_delta
+    from iceberg_tools_spark.iceberg.dml import update_where
+    from iceberg_tools_spark.iceberg.rewrite_data import rewrite_data_files
+
+    mp = lambda root: os.path.join(root, "v2.metadata.json")  # noqa: E731
+    g = lambda root: {"path": _write_g(root), "partition": {"category": "w", "id_trunc": 400}}  # noqa: E731
+    return {
+        "append": lambda spark, root: append_snapshot(mp(root), [g(root)]),
+        "overwrite": lambda spark, root: update_where(spark, mp(root), "id IN (115, 125)", {"id": "id + 1000"}),
+        "delete": lambda spark, root: commit_delete_snapshot(mp(root), [_pos_delete_b(root)]),
+        "row_delta": lambda spark, root: commit_row_delta(mp(root), [g(root)], [_pos_delete_b(root)]),
+        "dv_replace": _dv_replace,
+        "binpack": _binpack,
+        "rewrite_data_files": lambda spark, root: rewrite_data_files(spark, mp(root)),
+        "rewrite_position_deletes": _rewrite_position_deletes,
+        "rewrite_sorted": _rewrite_sorted,
+    }
+
+
+@pytest.mark.parametrize("kind", sorted(_commit_kinds()))
+def test_manifest_list_rows_match_their_entries(spark, tmp_path, kind):
+    """Every commit kind's manifest list states exactly what its
+    manifests hold: per-status file and row counts recount from the
+    entries, and the snapshot's total-* summary sums the list."""
+    from iceberg_tools_spark.avro.reader import AvroContainerFile
+    from iceberg_tools_spark.iceberg.deletes import DV_DIR
+    from iceberg_tools_spark.iceberg.metadata import parse_metadata
+    from iceberg_tools_spark.iceberg.snapshots import manifest_files_at, snapshot_by_id
+
+    root = str(tmp_path / "t")
+    shutil.copytree(DV_DIR if kind == "dv_replace" else MOR_DIR, root)
+    res = _commit_kinds()[kind](spark, root)
+    meta = parse_metadata(res["metadata_path"])
+    rows = manifest_files_at(meta, res["snapshot_id"], root)
+    for row in rows:
+        with open(row["local_path"], "rb") as f:
+            entries = list(AvroContainerFile(f.read()))
+        for status, label in ((1, "added"), (0, "existing"), (2, "deleted")):
+            hit = [e["data_file"]["record_count"] for e in entries if e["status"] == status]
+            assert row[f"{label}_files_count"] == len(hit), (row["manifest_path"], label)
+            assert row[f"{label}_rows_count"] == sum(hit), (row["manifest_path"], label)
+
+    def live(content, what):
+        return sum(
+            r[f"added_{what}_count"] + r[f"existing_{what}_count"] for r in rows if r["content"] == content
+        )
+
+    summary = snapshot_by_id(meta, res["snapshot_id"])["summary"]
+    assert summary["total-records"] == str(live(0, "rows"))
+    assert summary["total-data-files"] == str(live(0, "files"))
+    assert summary["total-delete-files"] == str(live(1, "files"))
+
+
+def test_commit_protocol_has_one_home():
+    """The manifest list and the next metadata.json are written only
+    by iceberg/commit.py — a new commit kind calls its helpers
+    instead of growing another copy of the commit tail."""
+    import iceberg_tools_spark
+
+    pkg = os.path.dirname(iceberg_tools_spark.__file__)
+    home = os.path.join(pkg, "iceberg", "commit.py")
+    offenders = []
+    for dirpath, _, files in os.walk(pkg):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py") or path == home:
+                continue
+            with open(path) as f:
+                text = f.read()
+            for needle in ("write_container(MANIFEST_LIST_SCHEMA", "_next_metadata_path("):
+                if needle in text:
+                    offenders.append((os.path.relpath(path, pkg), needle))
+    assert offenders == []
